@@ -13,6 +13,12 @@ and each subsequent level re-buckets the *carried* salt via integer
 division by ``fanin``, so the per-reducer fan-in is exactly ``<= fanin``
 at every level, not just in expectation under hash partitioning.
 
+Every level is one exchange (hash on the group columns; a single
+partition for the global level) followed by ``mapInArrow`` over
+``merge_groups``: Arrow's ``group_by`` finds the groups and each group's
+rows in arrival order, so key values stay exact for every Arrow key type
+and no row passes through pandas.
+
 Merge associativity (reference: tdigest.go:262-272 for the digest; HLL
 register-max / CMS counter-add / Bloom bit-or are trivially associative)
 is what makes tree depth irrelevant to correctness.
@@ -23,30 +29,183 @@ from __future__ import annotations
 import math
 from typing import Callable, Sequence
 
-import pandas as pd
-from pyspark.sql import DataFrame
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    FloatType,
+    LongType,
+    MapType,
+    StructField,
+    StructType,
+)
+
+_ROW = "_row"
+
+
+def require_flat_keys(fields: Sequence[StructField]) -> None:
+    """Reject struct, array and map group keys at plan time: Arrow can
+    neither dictionary-encode them (the partial builders) nor ``group_by``
+    them (the merge levels), so they would otherwise fail inside a
+    Python task."""
+    for f in fields:
+        if isinstance(f.dataType, (StructType, ArrayType, MapType)):
+            raise ValueError(
+                f"group column {f.name!r} has nested type "
+                f"{f.dataType.simpleString()}; group keys must be atomic"
+            )
+
+
+def canonical_key(field: StructField) -> Column:
+    """``field``'s column with float keys canonicalised, aliased to its
+    name: -0.0 becomes +0.0 and every NaN payload becomes the one
+    canonical NaN.  Spark's own groupBy folds both
+    (NormalizeFloatingNumbers), but the hash exchange, Arrow's
+    ``group_by`` and ``to_json`` see raw values: without this one logical
+    group would split into several rows.  SQL ``-0.0 == 0.0`` is TRUE, so
+    the second branch rewrites exactly the two zeros."""
+    c = F.col(field.name)
+    t = field.dataType
+    if isinstance(t, (FloatType, DoubleType)):
+        c = (
+            F.when(F.isnan(c), F.lit(float("nan")).cast(t))
+            .when(c == 0.0, F.lit(0.0).cast(t))
+            .otherwise(c)
+        )
+    return c.alias(field.name)
+
+
+def merge_groups(
+    table: pa.Table,
+    keys: Sequence[str],
+    out_schema: pa.Schema,
+    merge: Callable[[list], object],
+) -> pa.Table:
+    """One output row per distinct ``keys`` tuple of ``table``, groups in
+    order of first appearance.
+
+    ``out_schema`` holds the key columns, then the merged column, built
+    as ``merge(values)`` from the same-named input column's values of
+    the group (python objects in arrival order — KLL and Misra-Gries
+    bytes depend on it), then count columns, each summed from the
+    same-named int64 input column.  Other input columns are ignored.
+    """
+    keys = list(keys)
+    payload = next(f for f in out_schema if f.name not in keys)
+    if keys:
+        # group_by keeps each group's rows in arrival order but does not
+        # promise first-appearance group order (it breaks with two key
+        # columns), so the groups are sorted by their first row
+        grouped = (
+            table.append_column(_ROW, pa.array(np.arange(table.num_rows)))
+            .group_by(keys, use_threads=False)
+            .aggregate([(_ROW, "list"), (_ROW, "min")])
+            .sort_by(_ROW + "_min")
+        )
+        lists = grouped.column(_ROW + "_list").combine_chunks()
+        order = lists.flatten().to_numpy()
+        lengths = lists.value_lengths().to_numpy()
+    else:
+        grouped = None
+        order = np.arange(table.num_rows)
+        lengths = np.array([table.num_rows])
+    starts = np.concatenate(([0], np.cumsum(lengths)))
+
+    values = table.column(payload.name).take(order).to_pylist()
+    merged = [merge(values[a:b]) for a, b in zip(starts[:-1], starts[1:])]
+
+    cols = []
+    for f in out_schema:
+        if f.name in keys:
+            col = grouped.column(f.name)
+        elif f.name == payload.name:
+            col = pa.array(merged, type=f.type)
+        else:
+            counts = table.column(f.name).to_numpy()[order]
+            col = pa.array(np.add.reduceat(counts, starts[:-1]), type=f.type)
+        cols.append(col if col.type == f.type else col.cast(f.type))
+    return pa.Table.from_arrays(cols, schema=out_schema)
+
+
+def grouped_merge(
+    df: DataFrame,
+    group_cols: Sequence[str],
+    out_schema: StructType,
+    merge: Callable[[list], object],
+    n_upstream: int | None = None,
+) -> DataFrame:
+    """One-row-per-group merge: an exchange that co-locates each group
+    (hash on ``group_cols``; one partition when there are none), then
+    ``merge_groups`` once per shuffle partition — one python call per
+    partition, not one per group.
+
+    The exchange width is DERIVED from the upstream partition count
+    instead of pinned to spark.sql.shuffle.partitions: the partial
+    tables carry at most (upstream partitions x groups) rows of
+    O(compression) bytes, so min(shuffle.partitions, upstream) reducers
+    is always enough — at scale upstream >> shuffle.partitions and the
+    width is unchanged, while a small input stops scheduling one
+    python-worker task per configured shuffle partition for a handful
+    of partial rows (guide §2.2: size the exchange from the data, not
+    the core count).
+    """
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    group_cols = list(group_cols)
+    # float keys are canonicalised BEFORE the exchange, so both zeros
+    # and every NaN payload hash to one reducer and one Arrow group
+    floats = {
+        f.name: canonical_key(f)
+        for f in df.schema.fields
+        if f.name in group_cols
+        and isinstance(f.dataType, (FloatType, DoubleType))
+    }
+    if floats:
+        df = df.withColumns(floats)
+    if group_cols:
+        try:
+            n_shuffle = int(
+                df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+            )
+        except (TypeError, ValueError):
+            n_shuffle = df.sparkSession.sparkContext.defaultParallelism
+        if n_upstream is None:
+            n_upstream = df.rdd.getNumPartitions()
+        n_target = max(1, min(n_shuffle, n_upstream))
+        dist = df.repartition(n_target, *[F.col(c) for c in group_cols])
+    else:
+        dist = df.repartition(1)
+    arrow_out = pa.schema(
+        [pa.field(f.name, to_arrow_type(f.dataType)) for f in out_schema]
+    )
+
+    def run(batches):
+        batches = [b for b in batches if b.num_rows]
+        if batches:
+            yield from merge_groups(
+                pa.Table.from_batches(batches), group_cols, arrow_out, merge
+            ).to_batches()
+
+    return dist.mapInArrow(run, out_schema)
 
 
 def tree_merge(
     partials: DataFrame,
     by: Sequence[str],
     schema: StructType,
-    merge_fn: Callable[[pd.DataFrame], pd.DataFrame],
+    merge_fn: Callable[[list[bytes]], bytes],
     fanin: int | None,
     n_units: int | None = None,
 ) -> DataFrame:
     """Merge partial rows to one row per group.
 
-    ``merge_fn(pdf) -> list`` must return ONE plain row (a list of
-    values in ``schema`` column order) for the group slice it receives
-    (it may receive extra columns, e.g. the salt — select what it
-    needs).  Returning a list instead of a 1-row DataFrame lets the
-    merge stage assemble a SINGLE DataFrame per task: at fine groupings
-    (hourly windows — 720 groups) the per-group DataFrame construction
-    + concat was most of the merge stage's wall time.  ``fanin=None``
-    disables salting (single-level merge).
+    ``schema`` is the ``by`` columns, the sketch column, then int64
+    count columns (see ``merge_groups``); ``merge_fn(list[bytes]) ->
+    bytes`` merges one group's sketches.  ``fanin=None`` disables
+    salting (single-level merge).
 
     ``n_units``: upper bound on partials per group.  The default (None)
     assumes the stage-1 builder invariant — at most one partial per
@@ -60,154 +219,9 @@ def tree_merge(
     (hard bound again, since level 0 leaves one row per (group, salt)).
     """
     by = list(by)
-    columns = [f.name for f in schema.fields]
     if fanin is not None and fanin < 2:
         raise ValueError("fanin must be >= 2")
-
-    def grouped_merge(
-        df: DataFrame, group_cols: list[str], out_schema: StructType,
-        fn: Callable[[pd.DataFrame], pd.DataFrame],
-        n_upstream: int | None = None,
-    ) -> DataFrame:
-        """One-row-per-group merge via repartition + mapInPandas.
-
-        Same co-location guarantee as groupBy().applyInPandas (hash
-        partitioning on the group columns), but ONE python call per
-        shuffle partition instead of one per group — Spark's per-group
-        pandas machinery costs ~2-4 ms/group, which dominates when a
-        fine-grained grouping (hourly windows, per-user keys) produces
-        thousands of tiny groups.  Per-group row order stays shuffle
-        arrival order either way (merge associativity makes it moot).
-
-        Exact-key discipline (advisor r3, medium): a long key column
-        with ANY null in a partition arrives from Arrow->pandas as lossy
-        float64 (the documented round-2 pandas trap), so distinct int64
-        keys beyond 2^53 could collide — silently merging two groups —
-        and the merged row's key VALUE itself could come back corrupted.
-        Two measures: (1) the pandas-side split groups on a JVM-computed
-        JSON encoding of the key tuple (injective over distinct key
-        tuples, rendered from exact values), never on pandas key
-        columns; (2) the stage runs as mapInArrow and key columns are
-        handed to ``fn`` as exact python objects (object dtype via
-        ``to_pylist``), so ``pdf[key].iloc[0]`` in every merge_fn reads
-        the true value.  Non-key columns (sketch bytes, counts —NOT
-        NULL by construction) keep the plain pandas conversion.
-        """
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        gkey = "_gkey"
-        # Float/double group keys: normalize -0.0 to +0.0 BEFORE both
-        # the exchange and the JSON rendering.  Spark's own groupBy
-        # folds them into one group (NormalizeFloatingNumbers), but
-        # to_json renders them differently ({"k":0.0} vs {"k":-0.0}),
-        # so without this a double `by` column containing both zeros
-        # would emit two digest rows for one logical group.  The SQL
-        # comparison -0.0 == 0.0 is TRUE, so the when() rewrites
-        # exactly the two zeros; NaN/null fall through unchanged.
-        from pyspark.sql.types import DoubleType, FloatType
-
-        for f in df.schema.fields:
-            if f.name in group_cols and isinstance(
-                f.dataType, (FloatType, DoubleType)
-            ):
-                df = df.withColumn(
-                    f.name,
-                    F.when(
-                        F.col(f.name) == 0.0, F.lit(0.0).cast(f.dataType)
-                    ).otherwise(F.col(f.name)),
-                )
-        # Merge-exchange width is DERIVED from the upstream partition
-        # count instead of pinned to spark.sql.shuffle.partitions: the
-        # partial tables carry at most (upstream partitions x groups)
-        # rows of O(compression) bytes, so min(shuffle.partitions,
-        # upstream) reducers is always enough — at scale upstream >>
-        # shuffle.partitions and the width is unchanged, while a small
-        # input stops scheduling one python-worker task per configured
-        # shuffle partition for a handful of partial rows (guide §2.2:
-        # size the exchange from the data, not the core count).
-        # gkey is computed AFTER the exchange so the JSON rendering is
-        # not serialized through the shuffle alongside the raw keys.
-        # Default to_json truncates timestamps to MILLISECONDS (.SSS) —
-        # explicit micro-precision formats keep the encoding injective
-        # for sub-millisecond-distinct timestamp keys (Spark timestamps
-        # are exactly microsecond-precision, so 6 fractional digits are
-        # lossless).
-        try:
-            n_shuffle = int(
-                df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        except (TypeError, ValueError):
-            n_shuffle = df.sparkSession.sparkContext.defaultParallelism
-        if n_upstream is None:
-            n_upstream = df.rdd.getNumPartitions()
-        n_target = max(1, min(n_shuffle, n_upstream))
-        dist = df.repartition(
-            n_target, *[F.col(c) for c in group_cols]
-        ).withColumn(
-            gkey,
-            F.to_json(
-                F.struct(*[F.col(c) for c in group_cols]),
-                {
-                    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
-                    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
-                },
-            ),
-        )
-        in_fields = dist.schema.fields
-        key_set = set(group_cols)
-        arrow_out = pa.schema(
-            [
-                pa.field(f.name, to_arrow_type(f.dataType))
-                for f in out_schema.fields
-            ]
-        )
-
-        out_columns = [f.name for f in out_schema.fields]
-
-        def run(batches):
-            chunks = []
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                cols = {}
-                for i, f in enumerate(in_fields):
-                    col = batch.column(i)
-                    if f.name in key_set:
-                        cols[f.name] = pd.Series(col.to_pylist(), dtype=object)
-                    else:
-                        cols[f.name] = col.to_pandas()
-                chunks.append(pd.DataFrame(cols))
-            if not chunks:
-                return
-            whole = (
-                chunks[0]
-                if len(chunks) == 1
-                else pd.concat(chunks, ignore_index=True)
-            )
-            # one plain row per group, ONE DataFrame per task (fn never
-            # reads gkey, so the group slice is passed as-is)
-            rows = [
-                fn(grp)
-                for _, grp in whole.groupby(gkey, dropna=False, sort=False)
-            ]
-            if rows:
-                # column-wise OBJECT-dtype assembly: pd.DataFrame(rows)
-                # would re-infer dtypes — int64 keys beyond 2^53 beside
-                # NULLs become lossy float64, timestamp/decimal keys
-                # fail the Arrow cast — while object columns convert
-                # through the explicit schema value-exactly
-                data = {
-                    name: pd.Series(col, dtype=object)
-                    for name, col in zip(out_columns, zip(*rows))
-                }
-                yield pa.RecordBatch.from_pandas(
-                    pd.DataFrame(data),
-                    schema=arrow_out,
-                    preserve_index=False,
-                )
-
-        return dist.mapInArrow(run, out_schema)
+    require_flat_keys([f for f in schema.fields if f.name in by])
 
     if not fanin:
         n_parts = 0
@@ -219,10 +233,6 @@ def tree_merge(
         salted_schema = StructType(
             [StructField("_salt", LongType(), False)] + list(schema.fields)
         )
-
-        def merge_salted(pdf: pd.DataFrame) -> list:
-            return [pdf["_salt"].iloc[0]] + merge_fn(pdf[columns])
-
         first = True
         while n_parts > fanin:
             n_salts = int(math.ceil(n_parts / fanin))
@@ -247,20 +257,13 @@ def tree_merge(
                 partials.withColumn("_salt", salt),
                 by + ["_salt"],
                 salted_schema,
-                merge_salted,
+                merge_fn,
                 n_upstream=n_parts,
             )
             n_parts = n_salts
 
-    if by:
-        return grouped_merge(
-            partials, by, schema, lambda pdf: merge_fn(pdf[columns]),
-            # after salt levels the upstream width is the last level's
-            # reducer count; fanin=None probes the plan directly
-            n_upstream=n_parts if fanin else None,
-        )
-    # global aggregate: single group (applyInPandas needs a DataFrame)
-    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        lambda pdf: pd.DataFrame([merge_fn(pdf[columns])], columns=columns),
-        schema,
+    # after salt levels the upstream width is the last level's reducer
+    # count; fanin=None probes the plan directly
+    return grouped_merge(
+        partials, by, schema, merge_fn, n_upstream=n_parts if fanin else None
     )

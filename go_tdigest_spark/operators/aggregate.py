@@ -6,9 +6,10 @@ get no Catalyst partial-aggregation split — whole groups are shuffled to
 a single python worker, which is exactly the skew trap the north rule
 names.  Instead we build one partial digest per (input partition x group)
 with ``mapInArrow`` (zero shuffle — this is the reference's "one digest
-per node" deployment, tdigest.go:3-8), then tree-merge partials through a
-salted ``applyInPandas`` stage so a group's fan-in is bounded no matter
-how many input partitions (or how skewed the group distribution) —
+per node" deployment, tdigest.go:3-8), then tree-merge partials through
+salted ``mapInArrow`` levels (``_tree.py``) so a group's fan-in is
+bounded no matter how many input partitions (or how skewed the group
+distribution) —
 digest mergeability (tdigest.go:262-272) makes tree depth irrelevant to
 correctness.
 
@@ -40,6 +41,7 @@ from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from ..core import TDigest
 from .. import serde
+from ._tree import canonical_key, require_flat_keys
 
 DIGEST_COL = "digest"
 ROWS_COL = "n_rows"
@@ -52,6 +54,7 @@ def _group_fields(df: DataFrame, by: Sequence[str]) -> list[StructField]:
     missing = by_set - {f.name for f in fields}
     if missing:
         raise ValueError(f"group columns not in DataFrame: {sorted(missing)}")
+    require_flat_keys(fields)
     by_index = {name: i for i, name in enumerate(by)}
     return sorted(fields, key=lambda f: by_index[f.name])
 
@@ -215,21 +218,10 @@ def build_partials(
     return pruned.mapInArrow(gen, schema)
 
 
-def _merge_partials_fn(by: Sequence[str], columns: list[str]):
-    # returns ONE plain row (column-order list) per group slice — the
-    # tree assembles a single DataFrame per task (_tree.py contract)
-    def merge(pdf: pd.DataFrame) -> list:
-        digests = [serde.decode(b) for b in pdf[DIGEST_COL]]
-        merged = TDigest.merge_all(digests)
-        merged.compress()
-        head = [pdf[c].iloc[0] for c in by]
-        return head + [
-            serde.encode(merged),
-            int(pdf[ROWS_COL].sum()),
-            int(pdf[WEIGHT_COL].sum()),
-        ]
-
-    return merge
+def _merge_digests(blobs: list[bytes]) -> bytes:
+    merged = TDigest.merge_all([serde.decode(b) for b in blobs])
+    merged.compress()
+    return serde.encode(merged)
 
 
 def merge_partials(
@@ -260,9 +252,9 @@ def merge_partials(
             StructField(WEIGHT_COL, LongType(), False),
         ]
     )
-    columns = [f.name for f in schema.fields]
-    merge = _merge_partials_fn(by, columns)
-    return tree_merge(partials, by, schema, merge, fanin, n_units=n_units)
+    return tree_merge(
+        partials, by, schema, _merge_digests, fanin, n_units=n_units
+    )
 
 
 def tdigest_agg(
@@ -340,20 +332,23 @@ def tdigest_bucket(
 
 _KEY_JSON_OPTS = {
     # micro-precision timestamps keep the rendering injective (Spark
-    # timestamps are exactly microsecond precision) — same contract as
-    # the tree-merge group encoding in _tree.py
+    # timestamps are exactly microsecond precision)
     "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
     "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
 }
 
 
-def _group_key_col(by: Sequence[str]):
-    """Injective JSON rendering of the group-key tuple (one small string
-    per row) — the join/lookup key the annotator kernels use instead of
-    carrying an O(compression)-byte digest blob on every fact row."""
+def _group_key_col(df: DataFrame, by: Sequence[str]):
+    """Injective JSON rendering of ``df``'s group-key tuple (one small
+    string per row) — the join/lookup key the annotator kernels use
+    instead of carrying an O(compression)-byte digest blob on every fact
+    row.  Float keys are canonicalised as in the tree merge, so a -0.0
+    fact row finds the digest of the folded 0.0 group."""
     if not by:
         return F.lit("{}")
-    return F.to_json(F.struct(*[F.col(c) for c in by]), _KEY_JSON_OPTS)
+    return F.to_json(
+        F.struct(*[canonical_key(df.schema[c]) for c in by]), _KEY_JSON_OPTS
+    )
 
 
 def _collect_digest_map(digests: DataFrame, by: Sequence[str]) -> dict:
@@ -368,7 +363,8 @@ def _collect_digest_map(digests: DataFrame, by: Sequence[str]) -> dict:
     the rank/normalize annotators at any scale).
     """
     rows = digests.select(
-        _group_key_col(by).alias("_k"), F.col(DIGEST_COL).alias("_d")
+        _group_key_col(digests, by).alias("_k"),
+        F.col(DIGEST_COL).alias("_d"),
     ).collect()
     mapping = {
         r["_k"]: (None if r["_d"] is None else bytes(r["_d"])) for r in rows
@@ -466,9 +462,12 @@ def tdigest_rank(
     per batch, vectorized evaluation) — one scan of the fact table, no
     join, no row shuffle, and no O(compression)-byte blob per fact row
     through the python boundary (the r5 plan shipped digest x rows
-    bytes through Arrow, which dominated the annotator's cost).  Same
-    NULL convention as before: NULL values and groups absent from the
-    digest table get NULL rank.
+    bytes through Arrow, which dominated the annotator's cost).
+
+    NULLs: a NULL value gets a NULL rank, and so does a row whose group
+    has no row in the digest table.  A NULL group key is a group like
+    any other — ``tdigest_agg`` emits a digest for it, as SQL GROUP BY
+    does — so NULL-keyed rows are ranked against that digest.
     """
     for c in (rank_col, "_rank_key"):
         if c in df.columns:
@@ -495,7 +494,7 @@ def tdigest_rank(
         rank_col,
         F.when(
             F.col(value_col).isNotNull(),
-            rank_udf(_group_key_col(by), F.col(value_col)),
+            rank_udf(_group_key_col(df, by), F.col(value_col)),
         ),
     )
 
@@ -643,7 +642,7 @@ def tdigest_normalize(
         out_col,
         F.when(
             F.col(value_col).isNotNull(),
-            norm_udf(_group_key_col(by), F.col(value_col)),
+            norm_udf(_group_key_col(df, by), F.col(value_col)),
         ),
     )
 

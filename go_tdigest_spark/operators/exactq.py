@@ -11,8 +11,9 @@ OpenHashMap-of-boxed-doubles aggregation buffer:
     group), sort the partition's values with NumPy and emit ONE binary
     blob of sorted float64 plus nothing else — the same radix-argsort
     batch grouping as the digest builder (``_batch.group_codes``);
-  * stage 2: hash-repartition the O(partitions x groups) blob rows by
-    group, merge-sort the runs, and interpolate.
+  * stage 2: the tree merge's single level (``_tree.grouped_merge``):
+    hash-repartition the O(partitions x groups) blob rows by group,
+    merge-sort each group's runs, and interpolate.
 
 Shuffle posture at scale: identical to Spark's own ``percentile`` — the
 per-partition pre-aggregation ships every distinct value to one reducer
@@ -32,7 +33,6 @@ from __future__ import annotations
 from typing import Iterator, Sequence
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -43,6 +43,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ._tree import grouped_merge, require_flat_keys
 
 
 def _arrow_schema(schema: StructType) -> pa.Schema:
@@ -72,8 +74,11 @@ def exact_percentiles(
     pruned = df.select(*by, value_col).where(F.col(value_col).isNotNull())
     by_set = set(by)
     by_fields = [f for f in pruned.schema.fields if f.name in by_set]
+    require_flat_keys(by_fields)
+    # the sorted-run blobs travel under the output column's name, which
+    # the merge replaces with the interpolated percentiles
     s1_schema = StructType(
-        by_fields + [StructField("_blob", BinaryType(), False)]
+        by_fields + [StructField(out_col, BinaryType(), False)]
     )
     arrow1 = _arrow_schema(s1_schema)
     v_idx = len(by)
@@ -128,9 +133,6 @@ def exact_percentiles(
     out_schema = StructType(
         by_fields + [StructField(out_col, ArrayType(DoubleType()), False)]
     )
-    arrow_out = _arrow_schema(out_schema)
-    out_cols = [f.name for f in out_schema.fields]
-    key_cols = [f.name for f in by_fields]
 
     def interpolate(sorted_vals: np.ndarray) -> list[float]:
         n = sorted_vals.size
@@ -146,63 +148,9 @@ def exact_percentiles(
         )
         return [float(v) for v in res]
 
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        runs = [np.frombuffer(b, dtype=np.float64) for b in pdf["_blob"]]
+    def merge(blobs: list[bytes]) -> list[float]:
+        runs = [np.frombuffer(b, dtype=np.float64) for b in blobs]
         allv = runs[0] if len(runs) == 1 else np.concatenate(runs)
-        allv = np.sort(allv)
-        head = [pdf[c].iloc[0] for c in key_cols]
-        return pd.DataFrame([head + [interpolate(allv)]], columns=out_cols)
+        return interpolate(np.sort(allv))
 
-    if not by:
-        return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(
-            lambda pdf: merge_fn(pdf), out_schema
-        )
-
-    # same exact-key / co-location discipline as _tree.grouped_merge:
-    # hash exchange on the group columns (AQE sizes it from the actual
-    # blob bytes), JSON-keyed pandas split so int64/timestamp keys are
-    # never coerced through lossy float64
-    gkey = "_gkey"
-    dist = partials.repartition(*[F.col(c) for c in by]).withColumn(
-        gkey,
-        F.to_json(
-            F.struct(*[F.col(c) for c in by]),
-            {
-                "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
-                "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
-            },
-        ),
-    )
-    in_fields = dist.schema.fields
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        chunks = []
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            cols = {}
-            for i, f in enumerate(in_fields):
-                col = batch.column(i)
-                if f.name in by_set:
-                    cols[f.name] = pd.Series(col.to_pylist(), dtype=object)
-                else:
-                    cols[f.name] = col.to_pandas()
-            chunks.append(pd.DataFrame(cols))
-        if not chunks:
-            return
-        whole = (
-            chunks[0]
-            if len(chunks) == 1
-            else pd.concat(chunks, ignore_index=True)
-        )
-        outs = [
-            merge_fn(grp.drop(columns=[gkey]))
-            for _, grp in whole.groupby(gkey, dropna=False, sort=False)
-        ]
-        if outs:
-            out_pdf = pd.concat(outs, ignore_index=True)
-            yield pa.RecordBatch.from_pandas(
-                out_pdf, schema=arrow_out, preserve_index=False
-            )
-
-    return dist.mapInArrow(run, out_schema)
+    return grouped_merge(partials, by, out_schema, merge)

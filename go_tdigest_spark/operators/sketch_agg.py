@@ -36,6 +36,7 @@ from ..sketches import (
     MisraGries,
     ThetaSketch,
 )
+from ._tree import require_flat_keys
 
 
 def _hash_cols(cols: Sequence[str], seed_salt: int = 0):
@@ -102,6 +103,7 @@ def _generic_partials(
     )
     pruned = df.select(*proj)
     by_fields = [f for f in pruned.schema.fields if f.name in set(by)]
+    require_flat_keys(by_fields)
     schema = StructType(
         by_fields
         + [
@@ -210,19 +212,12 @@ def _merge_stage(
             StructField("n_rows", LongType(), False),
         ]
     )
-    columns = [f.name for f in schema.fields]
 
-    # one plain row per group slice — _tree.py assembles one DataFrame
-    # per task (per-group DataFrame construction dominated fine groupings)
-    def merge(pdf: pd.DataFrame) -> list:
-        sk = None
-        for b in pdf["sketch"]:
-            s = decode(bytes(b))
-            sk = s if sk is None else sk.merge(s)
-        return [pdf[c].iloc[0] for c in by] + [
-            sk.to_bytes(),
-            int(pdf["n_rows"].sum()),
-        ]
+    def merge(blobs: list[bytes]) -> bytes:
+        sk = decode(blobs[0])
+        for b in blobs[1:]:
+            sk = sk.merge(decode(b))
+        return sk.to_bytes()
 
     return tree_merge(partials, by, schema, merge, fanin, n_units=n_units)
 

@@ -34,6 +34,51 @@ def timeit(fn, reps=5):
     return best
 
 
+def merge_stage_case(n_groups: int, n_partials: int = 3, reps: int = 5) -> dict:
+    """Tree-merge stage body, driver-side (no Spark): one shuffle
+    partition's worth of t-digest partials, ``n_partials`` per group of
+    an int64 key, arriving partition by partition as a merge level sees
+    them.  ``split_ms`` times ``_tree.merge_groups`` (Arrow group_by,
+    per-group merge callback, summed counts, key columns);
+    ``callbacks_ms`` times the merge callbacks alone on pre-split
+    groups, the floor any split design pays.  Milliseconds, best of
+    ``reps``."""
+    import pyarrow as pa
+
+    from go_tdigest_spark.operators._tree import merge_groups
+    from go_tdigest_spark.operators.aggregate import _merge_digests
+
+    rng = np.random.default_rng(7)
+    keys = rng.permutation(np.arange(n_groups, dtype=np.int64) * 7919)
+    blobs, key_col = [], []
+    for _ in range(n_partials):  # one block of partials per upstream partition
+        for k in keys:
+            blobs.append(serde.encode(TDigest.from_values(rng.random(2))))
+            key_col.append(int(k))
+    table = pa.table(
+        {
+            "k": pa.array(key_col, pa.int64()),
+            "digest": pa.array(blobs, pa.binary()),
+            "n_rows": pa.array(np.full(len(blobs), 2), pa.int64()),
+            "total_weight": pa.array(np.full(len(blobs), 2), pa.int64()),
+        }
+    )
+    groups = [blobs[g::n_groups] for g in range(n_groups)]
+    return {
+        "split_ms": round(
+            timeit(
+                lambda: merge_groups(table, ["k"], table.schema, _merge_digests),
+                reps,
+            )
+            * 1e3,
+            1,
+        ),
+        "callbacks_ms": round(
+            timeit(lambda: [_merge_digests(b) for b in groups], reps) * 1e3, 1
+        ),
+    }
+
+
 def main() -> None:
     rng = np.random.default_rng(42)
     out: dict = {}
@@ -111,6 +156,12 @@ def main() -> None:
         d._flush()
 
     out["int_token_values_per_sec"] = int(toks.size / timeit(run_tok, reps=3))
+
+    # tree-merge stage at the highcard_sketches benchmark's grouping
+    # (~460 groups) and ten times it
+    out["merge_stage_by_groups"] = {
+        str(g): merge_stage_case(g) for g in (460, 5_000)
+    }
 
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     with open(os.path.join(REPO, "BENCH", "kernel_micro.json"), "w") as f:
