@@ -9,6 +9,9 @@ kernel driven through Spark's DataFrame API with explicit two-phase
 
 from .core import TDigest, DEFAULT_COMPRESSION
 from . import serde
+from . import _worker
+
+_worker.install()
 
 __version__ = "0.1.0"
 

@@ -298,7 +298,8 @@ def tdigest_bucket(
     deviates from n/n_buckets only by t-digest rank error
     (~1/compression interior — bounds pinned in tests).  Boundary
     semantics: a value equal to a boundary goes to the HIGHER bucket.
-    NULL values (and groups absent from the digest) get NULL bucket.
+    NULL values (and groups absent from the digest) get NULL bucket;
+    NULL-keyed rows are bucketed by the NULL group's boundaries.
     """
     if n_buckets < 1:
         raise ValueError("n_buckets must be >= 1")
@@ -318,16 +319,34 @@ def tdigest_bucket(
             td_quantile("digest", qs) if qs else F.array().cast("array<double>")
         ).alias("_bounds"),
     )
-    if by:
-        joined = df.join(F.broadcast(bounds), by, "left")
-    else:
-        joined = df.crossJoin(F.broadcast(bounds))
+    joined = _join_bounds(df, bounds, by)
     fold = F.expr(
         f"aggregate(_bounds, 0, (acc, b) -> acc + if(b <= {value_col}, 1, 0))"
     )
     return joined.withColumn(
         "bucket", F.when(F.col(value_col).isNotNull(), fold)
     ).drop("_bounds")
+
+
+def _join_bounds(df: DataFrame, bounds: DataFrame, by: Sequence[str]) -> DataFrame:
+    """Left-join the O(groups)-row ``bounds`` table (``by..., extras``)
+    onto every row of ``df`` as a broadcast hash join, matching group
+    keys null-safely so NULL-keyed rows meet the NULL group's row, as in
+    tdigest_rank.  Columns come out as a ``using`` join on ``by`` orders
+    them: keys, the rest of ``df``, then the extras."""
+    if not by:
+        return df.crossJoin(F.broadcast(bounds))
+    keys = [f"_bk{i}" for i in range(len(by))]
+    extras = [c for c in bounds.columns if c not in by]
+    b = bounds.select(
+        *[bounds[c].alias(k) for c, k in zip(by, keys)], *extras
+    )
+    cond = [df[c].eqNullSafe(b[k]) for c, k in zip(by, keys)]
+    return df.join(F.broadcast(b), cond, "left").select(
+        *[df[c] for c in by],
+        *[df[c] for c in df.columns if c not in by],
+        *[b[c] for c in extras],
+    )
 
 
 _KEY_JSON_OPTS = {
@@ -516,8 +535,9 @@ def tdigest_winsorize(
     percentile needs.  Clip points are within t-digest rank error of the
     exact percentiles; values BETWEEN the clip points pass through
     bit-identical.  NULL values (and rows whose group has no digest)
-    stay NULL/unclipped respectively; ``digests=`` reuses a stored
-    digest table exactly as in tdigest_rank.
+    stay NULL/unclipped respectively; NULL-keyed rows are clipped at the
+    NULL group's quantiles; ``digests=`` reuses a stored digest table
+    exactly as in tdigest_rank.
 
     Plan: the quantile reads run on the O(groups)-row digest table,
     broadcast back, one map-side join, JVM-side clamp
@@ -547,11 +567,7 @@ def tdigest_winsorize(
         td_quantile("digest", p_lo).alias("_w_lo"),
         td_quantile("digest", p_hi).alias("_w_hi"),
     )
-    joined = (
-        df.join(F.broadcast(bounds), by, "left")
-        if by
-        else df.crossJoin(F.broadcast(bounds))
-    )
+    joined = _join_bounds(df, bounds, by)
     clipped = F.least(F.greatest(F.col(value_col), F.col("_w_lo")), F.col("_w_hi"))
     return joined.withColumn(
         out_col,

@@ -202,28 +202,28 @@ def connected_components(
     # once the round's references drop; each holds only the (shrinking)
     # edge set, so peak residency is a few rounds of O(|E|).
     edges = _snapshot(edges, eager=False)
-    # max_iters + 1 checks bound max_iters STEP rounds, same budget as
-    # before; the pre-loop check also skips the loop entirely when the
+    # at most max_iters STEP rounds, each built only after a failed
+    # check; the first check also skips stepping entirely when the
     # input pairs already form stars (common for dedup pair lists)
-    for _ in range(max_iters + 1):
-        if _is_stars(edges):
-            # disjoint stars (u -> component min).  Labels = star edges
-            # plus self-labels for roots and for singleton nodes
-            # (self-loop-only pairs).  Snapshot the result so every
-            # downstream action reads O(|V|) materialized rows instead
-            # of re-running the round lineage + node inventory.
-            labels = edges.select(
-                F.col("u").alias("node"), F.col("v").alias("comp")
+    rounds = 0
+    while not _is_stars(edges):
+        if rounds == max_iters:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iters} "
+                "large-star/small-star rounds; raise max_iters"
             )
-            roots = all_nodes.join(labels, "node", "left_anti").select(
-                "node", F.col("node").alias("comp")
-            )
-            return _snapshot(labels.union(roots))
         edges = _snapshot(_small_star(_large_star(edges)), eager=False)
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iters} "
-        "large-star/small-star rounds; raise max_iters"
+        rounds += 1
+    # disjoint stars (u -> component min).  Labels = star edges plus
+    # self-labels for roots and for singleton nodes (self-loop-only
+    # pairs).  Snapshot the result so every downstream action reads
+    # O(|V|) materialized rows instead of re-running the round lineage
+    # + node inventory.
+    labels = edges.select(F.col("u").alias("node"), F.col("v").alias("comp"))
+    roots = all_nodes.join(labels, "node", "left_anti").select(
+        "node", F.col("node").alias("comp")
     )
+    return _snapshot(labels.union(roots))
 
 
 def connected_components_sql(

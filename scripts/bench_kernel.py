@@ -79,6 +79,65 @@ def merge_stage_case(n_groups: int, n_partials: int = 3, reps: int = 5) -> dict:
     }
 
 
+# the pyspark.zip entries of a warmed Spark 4.1 Python worker's
+# sys.path_importer_cache (the archive on PYTHONPATH and one per imported
+# subpackage); the worker also holds the py4j zip and the spark-core jar,
+# two entries each
+WORKER_ZIP_PREFIXES = (
+    "",
+    "pyspark",
+    "pyspark/cloudpickle",
+    "pyspark/core",
+    "pyspark/errors",
+    "pyspark/errors/exceptions",
+    "pyspark/logger",
+    "pyspark/resource",
+    "pyspark/sql",
+    "pyspark/sql/functions",
+    "pyspark/sql/pandas",
+    "pyspark/sql/streaming",
+)
+
+
+def worker_invalidate_case(reps: int = 5) -> dict | None:
+    """A Spark Python worker's per-task ``importlib.invalidate_caches()``
+    without Spark: zipimporters for ``$SPARK_HOME/python/lib/pyspark.zip``
+    at the prefixes a warmed worker holds are registered in
+    ``sys.path_importer_cache`` and the call is timed with the stock
+    ``zipimporter.invalidate_caches`` (``stock_ms``) and with
+    ``go_tdigest_spark._worker``'s conditional reload (``shim_ms``).
+    Milliseconds, best of ``reps``; None when there is no pyspark.zip."""
+    import importlib
+    import zipimport
+
+    from go_tdigest_spark import _worker
+
+    archive = os.path.join(
+        os.environ.get("SPARK_HOME", ""), "python", "lib", "pyspark.zip"
+    )
+    if not os.path.isfile(archive):
+        print(f"worker_invalidate_case: skipped, no {archive}")
+        return None
+    cls = zipimport.zipimporter
+    stock = cls.invalidate_caches
+    paths = [os.path.join(archive, p) if p else archive for p in WORKER_ZIP_PREFIXES]
+    try:
+        for path in paths:
+            sys.path_importer_cache[path] = cls(path)
+        stock_ms = timeit(importlib.invalidate_caches, reps) * 1e3
+        _worker._patch()
+        shim_ms = timeit(importlib.invalidate_caches, reps) * 1e3
+    finally:
+        cls.invalidate_caches = stock
+        for path in paths:
+            sys.path_importer_cache.pop(path, None)
+    return {
+        "zipimporters": len(paths),
+        "stock_ms": round(stock_ms, 2),
+        "shim_ms": round(shim_ms, 2),
+    }
+
+
 def main() -> None:
     rng = np.random.default_rng(42)
     out: dict = {}
@@ -162,6 +221,9 @@ def main() -> None:
     out["merge_stage_by_groups"] = {
         str(g): merge_stage_case(g) for g in (460, 5_000)
     }
+
+    # a Spark Python worker's per-task import-cache invalidation
+    out["worker_invalidate_ms"] = worker_invalidate_case()
 
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     with open(os.path.join(REPO, "BENCH", "kernel_micro.json"), "w") as f:

@@ -18,8 +18,10 @@ from go_tdigest_spark import serde
 from go_tdigest_spark.operators import (
     exact_percentiles,
     tdigest_agg,
+    tdigest_bucket,
     tdigest_normalize,
     tdigest_rank,
+    tdigest_winsorize,
 )
 from go_tdigest_spark.operators._tree import merge_groups
 from go_tdigest_spark.operators.sketch_agg import hll_agg, kll_agg, mg_agg
@@ -221,6 +223,71 @@ def test_rank_null_group_key_uses_null_group_digest(spark):
     assert all(p is not None for p in ranks)
     assert ranks == sorted(ranks) and ranks[0] < 0.1 and ranks[-1] > 0.9
     assert [r["pct_rank"] for r in out if r["v"] is None] == [None]
+
+
+def _null_keyed_frame(spark):
+    rows = [(None, float(i)) for i in range(40)]
+    rows += [("a", float(100 + i)) for i in range(40)]
+    rows += [(None, None)]
+    return spark.createDataFrame(rows, "g string, v double")
+
+
+def _fact_side_of_broadcast_join(df) -> list[str]:
+    """Plan lines of the streamed (fact) child of the one
+    BroadcastHashJoin in ``df``'s plan."""
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    (at,) = [i for i, ln in enumerate(lines) if "BroadcastHashJoin" in ln]
+    col = lines[at].index("BroadcastHashJoin")
+    fact = []
+    for ln in lines[at + 1 :]:
+        if ln[col : col + 3] == "+- ":  # the build (broadcast) child
+            break
+        fact.append(ln)
+    return fact
+
+
+def test_bucket_null_group_key_uses_null_group_bounds(spark):
+    """NULL-keyed rows are bucketed by the NULL group's boundaries (as
+    tdigest_rank ranks them), through a null-safe broadcast hash join
+    with no exchange on the fact side; only a NULL value gets a NULL
+    bucket.  Column order is that of a ``using`` join on ``by``."""
+    df = _null_keyed_frame(spark)
+    b = tdigest_bucket(df, "v", 4, by=["g"])
+    assert b.columns == ["g", "v", "bucket"]
+    fact = _fact_side_of_broadcast_join(b)
+    assert fact and not any("Exchange" in ln for ln in fact)
+    out = b.collect()
+    assert len(out) == 81
+    for g in (None, "a"):
+        got = sorted(
+            (r["v"], r["bucket"])
+            for r in out
+            if r["g"] == g and r["v"] is not None
+        )
+        assert [bk for _, bk in got] == [i // 10 for i in range(40)]
+    assert [r["bucket"] for r in out if r["v"] is None] == [None]
+
+
+def test_winsorize_null_group_key_uses_null_group_bounds(spark):
+    """NULL-keyed rows are clipped at the NULL group's quantiles, through
+    the same null-safe broadcast hash join; a NULL value stays NULL."""
+    df = _null_keyed_frame(spark)
+    w = tdigest_winsorize(df, "v", 0.1, 0.9, by=["g"])
+    assert w.columns == ["g", "v", "v_winsorized"]
+    fact = _fact_side_of_broadcast_join(w)
+    assert fact and not any("Exchange" in ln for ln in fact)
+    out = w.collect()
+    for g, base in ((None, 0.0), ("a", 100.0)):
+        got = sorted(
+            (r["v"], r["v_winsorized"])
+            for r in out
+            if r["g"] == g and r["v"] is not None
+        )
+        assert len(got) == 40
+        clipped = [v != wz for v, wz in got]
+        assert any(clipped[:6]) and any(clipped[-6:]) and not any(clipped[6:-6])
+        assert all(base + 3 <= wz <= base + 36 for _, wz in got)
+    assert [r["v_winsorized"] for r in out if r["v"] is None] == [None]
 
 
 def test_nested_group_keys_fail_at_plan_time(spark):
