@@ -911,6 +911,10 @@ def _q_repetition_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cluster (same bounded pattern as _q_simhash; at real scale the
     # source has many splits and this is a no-op).  Every consumer
     # shares the one exchange (ReusedExchange).
+    # getNumPartitions() assumes table() returns an exchange-free scan:
+    # the count is then the scan's split count, read from the plan
+    # without running a job.  Over an exchange it would report the
+    # shuffle width instead (and, under AQE, could run the shuffle).
     par = spark.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par)

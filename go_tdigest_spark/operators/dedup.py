@@ -122,6 +122,62 @@ def py_shingles(text: str, n: int) -> list[str]:
     return [" ".join(words[i : i + n]) for i in range(len(words) - n + 1)]
 
 
+def ngram_hash_batch(
+    texts: list[str], n: int, mod: int = FP_MOD
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Polynomial hashes of every word n-gram shingle of a batch of
+    texts, composed from word hashes instead of built shingle strings.
+
+    Returns ``(h, doc_pos, doc_bounds)``: ``doc_pos`` are the indices of
+    the texts with at least one shingle, and ``h[doc_bounds[k]:
+    doc_bounds[k + 1]]`` equals ``poly_hash_batch(py_shingles(t, n),
+    FP_BASE, mod)`` for ``t = texts[doc_pos[k]]``, bit for bit.
+
+    Every word (py_words) is hashed once; appending `` y`` to a shingle
+    is ``h * B^(len y + 1) + 32 * B^(len y) + H(y) mod M`` (32 is the
+    space), applied to all windows of the batch at once.  The product
+    stays exact in int64 only when ``M^2 < 2^63``: FP_MOD qualifies, the
+    57-bit SH_MOD does not and is refused (its kernels hash the shingle
+    strings with poly_hash_batch)."""
+    if mod * mod >= 1 << 63:
+        raise ValueError(
+            f"mod={mod}: composed shingle hashes need mod^2 < 2^63"
+        )
+    from ._batch import poly_hash_batch
+
+    words: list[str] = []
+    n_words = np.empty(len(texts), dtype=np.int64)
+    for i, t in enumerate(texts):
+        w = py_words(t)
+        words.extend(w)
+        n_words[i] = len(w)
+    counts = np.maximum(n_words - (n - 1), 0)
+    doc_pos = np.flatnonzero(counts)
+    doc_bounds = np.zeros(doc_pos.size + 1, dtype=np.int64)
+    np.cumsum(counts[doc_pos], out=doc_bounds[1:])
+    if doc_pos.size == 0:
+        return np.zeros(0, dtype=np.int64), doc_pos, doc_bounds
+    wh = poly_hash_batch(words, FP_BASE, mod)
+    # first word of every window: the doc's first word index, repeated
+    # over its windows, plus the window's rank inside the doc
+    first_word = np.cumsum(n_words) - n_words
+    starts = np.repeat(
+        first_word[doc_pos] - doc_bounds[:-1], counts[doc_pos]
+    ) + np.arange(doc_bounds[-1])
+    h = wh[starts]
+    if n > 1:
+        lens = np.fromiter(map(len, words), dtype=np.int64, count=len(words))
+        pows = [1]
+        for _ in range(int(lens.max())):
+            pows.append(pows[-1] * FP_BASE % mod)
+        pw = np.array(pows, dtype=np.int64)[lens]  # B^(len w) per word
+        mul = pw * FP_BASE % mod
+        add = (ord(" ") * pw + wh) % mod
+        for k in range(1, n):
+            h = (h * mul[starts + k] + add[starts + k]) % mod
+    return h, doc_pos, doc_bounds
+
+
 def words_frag(col: str, dialect: str) -> str:
     if dialect == "spark":
         # explicit ASCII class on every engine: Java \s already equals
@@ -480,10 +536,12 @@ def minhash_signatures(
     Computes bit-identical results to the pure-SQL formulation in
     ``minhash_signature_sql`` (polynomial codepoint hash + affine
     permutations mod 2^31-1, all exact int64 arithmetic), but ~30x
-    faster: per Arrow batch, every shingle of every doc is hashed with
-    ``max_shingle_len`` column-wise vectorized passes, and per-doc minima
-    come from one ``np.minimum.reduceat`` per permutation.  Duplicate
-    shingles need no dedup — min() is idempotent.
+    faster: per Arrow batch, every word is hashed once and every
+    shingle's hash is composed from its words' hashes
+    (:func:`ngram_hash_batch`, no shingle strings are built), and
+    per-doc minima come from one ``np.minimum.reduceat`` per
+    permutation.  Duplicate shingles need no dedup — min() is
+    idempotent.
     """
     import pyarrow as pa
 
@@ -497,26 +555,13 @@ def minhash_signatures(
 
     def gen(batches):
         for batch in batches:
-            texts = batch.column(1).to_pylist()
-            doc_pos: list[int] = []
-            all_shingles: list[str] = []
-            doc_bounds = [0]
-            for i, t in enumerate(texts):
-                sh = py_shingles(t, n)
-                if not sh:
-                    continue
-                doc_pos.append(i)
-                all_shingles.extend(sh)
-                doc_bounds.append(doc_bounds[-1] + len(sh))
-            if not doc_pos:
+            h, doc_pos, doc_bounds = ngram_hash_batch(
+                batch.column(1).to_pylist(), n
+            )
+            if not doc_pos.size:
                 continue
-            # column-wise polynomial hash over the whole batch's shingles
-            # (codepoints == SQL ascii())
-            from ._batch import poly_hash_batch
-
-            h = poly_hash_batch(all_shingles, FP_BASE, FP_MOD)
             # affine permutations + per-doc segment minima
-            starts = np.asarray(doc_bounds[:-1])
+            starts = doc_bounds[:-1]
             sig = np.empty((len(doc_pos), a_vec.size), dtype=np.int64)
             for p in range(a_vec.size):
                 hp = (a_vec[p] * h + b_vec[p]) % MH_PRIME
@@ -531,7 +576,7 @@ def minhash_signatures(
                 [
                     # take() keeps the declared id type (int32 ids would
                     # otherwise be re-inferred as int64)
-                    batch.column(0).take(pa.array(doc_pos, type=pa.int64())),
+                    batch.column(0).take(doc_pos),
                     sig_arr,
                 ],
                 names=["doc", "sig"],
@@ -624,6 +669,29 @@ def minhash_lsh_pairs(
     return lsh_pairs_from_sigs(
         sigs, n_hashes, bands, threshold, max_bucket_size
     )
+
+
+def _est_jaccard(n_hashes: int) -> Column:
+    """``est_jaccard``: the share of agreeing positions of the joined
+    ``sig_a``/``sig_b`` signatures, rounded to 4 decimals.
+
+    Up to 64 hashes the count is UNROLLED into n_hashes codegen'd
+    element comparisons — zip_with/filter lambdas are interpreted by
+    Catalyst and this expression runs once per unique candidate pair —
+    and built as ONE SQL string: each PySpark Column call costs about
+    12 py4j round trips, which a per-position Column sum pays ~450
+    times.  Unrolling is linear in expression-tree
+    size, so very wide signatures fall back to the O(1)-sized
+    (interpreted) zip_with form instead of risking codegen splits /
+    deep-tree blowups.  A NULL comparison counts as disagreement on
+    both paths."""
+    if n_hashes <= 64:
+        agree = " + ".join(
+            f"IF(sig_a[{i}] = sig_b[{i}], 1, 0)" for i in range(n_hashes)
+        )
+    else:
+        agree = "size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))"
+    return F.expr(f"round(({agree}) / {n_hashes}, 4) AS est_jaccard")
 
 
 def lsh_pairs_from_sigs(
@@ -726,26 +794,6 @@ def lsh_pairs_from_sigs(
         .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .distinct()
     )
-    # The agreement count is UNROLLED into n_hashes codegen'd element
-    # comparisons — zip_with/filter lambdas are interpreted by Catalyst
-    # and this expression runs once per unique candidate pair.
-    # Unrolling is linear in expression-tree size, so very wide
-    # signatures fall back to the O(1)-sized (interpreted) zip_with
-    # form instead of risking codegen splits / deep-tree blowups.
-    if n_hashes <= 64:
-        agree = sum(
-            F.when(F.col("sig_a")[i] == F.col("sig_b")[i], 1).otherwise(0)
-            for i in range(n_hashes)
-        )
-    else:
-        agree = F.size(
-            F.filter(
-                F.zip_with(
-                    F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y
-                ),
-                lambda v: v,
-            )
-        )
     sig_a = sigs.select(
         F.col("doc").alias("doc_a"), F.col("sig").alias("sig_a")
     )
@@ -758,7 +806,7 @@ def lsh_pairs_from_sigs(
         .select(
             "doc_a",
             "doc_b",
-            F.round(agree / F.lit(n_hashes), 4).alias("est_jaccard"),
+            _est_jaccard(n_hashes),
         )
         .where(F.col("est_jaccard") >= threshold)
     )
@@ -899,20 +947,6 @@ def lsh_pairs_vs_index(
         )
         .distinct()
     )
-    if n_hashes <= 64:
-        agree = sum(
-            F.when(F.col("sig_a")[i] == F.col("sig_b")[i], 1).otherwise(0)
-            for i in range(n_hashes)
-        )
-    else:
-        agree = F.size(
-            F.filter(
-                F.zip_with(
-                    F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y
-                ),
-                lambda v: v,
-            )
-        )
     sig_a = new_sigs.select(
         F.col("doc").alias("doc_new"), F.col("sig").alias("sig_a")
     )
@@ -925,7 +959,7 @@ def lsh_pairs_vs_index(
         .select(
             "doc_new",
             "doc_idx",
-            F.round(agree / F.lit(n_hashes), 4).alias("est_jaccard"),
+            _est_jaccard(n_hashes),
         )
         .where(F.col("est_jaccard") >= threshold)
     )

@@ -117,17 +117,9 @@ def connected_components(
         materializes the round's lazy snapshot — 1 job/round instead
         of 3 (eager checkpoint + count + exceptAll).
         """
-        marks = e.select(
-            F.col("u").alias("n"),
-            F.lit(1).alias("c"),
-            F.lit(0).alias("r"),
-        ).union(
-            e.select(
-                F.col("v").alias("n"),
-                F.lit(0).alias("c"),
-                F.lit(1).alias("r"),
-            )
-        )
+        # both endpoint marks from ONE scan of the (lazy) snapshot:
+        # child mark (u, 1, 0) and root mark (v, 0, 1) per edge
+        marks = e.selectExpr("stack(2, u, 1, 0, v, 0, 1) AS (n, c, r)")
         viol = (
             marks.groupBy("n")
             .agg(F.sum("c").alias("cu"), F.sum("r").alias("cv"))

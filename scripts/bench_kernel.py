@@ -138,6 +138,52 @@ def worker_invalidate_case(reps: int = 5) -> dict | None:
     }
 
 
+def shingle_hash_case(n_docs: int = 750, n: int = 5, reps: int = 5) -> dict:
+    """MinHash signing's shingle hashing on one seeded batch of
+    ``n_docs`` docs shaped like the docs_dedup benchmark's (150-300
+    words, Zipf-ish over a 20,000-word vocabulary), ``n``-word shingles.
+    ``string_ms`` builds every shingle string (py_shingles) and hashes
+    them with ``poly_hash_batch``; ``composed_ms`` is
+    ``dedup.ngram_hash_batch`` (words hashed once, shingle hashes
+    composed in NumPy).  Milliseconds, best of ``reps``; ``equal`` is
+    the bit-identity of hashes, doc bounds and kept positions."""
+    from go_tdigest_spark.operators._batch import poly_hash_batch
+    from go_tdigest_spark.operators.dedup import (
+        FP_BASE,
+        FP_MOD,
+        ngram_hash_batch,
+        py_shingles,
+    )
+
+    rng = np.random.default_rng(11)
+    vocab = np.array([f"w{i}" for i in range(20_000)], dtype=object)
+    texts = [
+        " ".join(vocab[(vocab.size * rng.random(k) ** 1.5).astype(np.int64)])
+        for k in rng.integers(150, 300, n_docs)
+    ]
+
+    def string_path():
+        doc_pos, shingles, bounds = [], [], [0]
+        for i, t in enumerate(texts):
+            sh = py_shingles(t, n)
+            if sh:
+                doc_pos.append(i)
+                shingles.extend(sh)
+                bounds.append(bounds[-1] + len(sh))
+        return poly_hash_batch(shingles, FP_BASE, FP_MOD), doc_pos, bounds
+
+    composed = ngram_hash_batch(texts, n)
+    return {
+        "string_ms": round(timeit(string_path, reps) * 1e3, 1),
+        "composed_ms": round(
+            timeit(lambda: ngram_hash_batch(texts, n), reps) * 1e3, 1
+        ),
+        "equal": all(
+            np.array_equal(x, y) for x, y in zip(string_path(), composed)
+        ),
+    }
+
+
 def main() -> None:
     rng = np.random.default_rng(42)
     out: dict = {}
@@ -224,6 +270,10 @@ def main() -> None:
 
     # a Spark Python worker's per-task import-cache invalidation
     out["worker_invalidate_ms"] = worker_invalidate_case()
+
+    # MinHash signing's shingle hashes: shingle strings vs composed
+    # from word hashes (750 docs, 5-word shingles)
+    out["shingle_hash_ms"] = shingle_hash_case()
 
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     with open(os.path.join(REPO, "BENCH", "kernel_micro.json"), "w") as f:
